@@ -15,10 +15,26 @@ Query modes map to the engine's search operators:
             first graph query, kept fresh incrementally by add())
     mtlsh   operators.mtlsh                (multiprobe multi-table LSH over
             a table-partitioned signature index — the EP3 scale star)
+    bq      operators.bq.bq_search_rerank  (flat packed 1-bit codes: Hamming
+            shortlist + exact re-rank)
+    pq      operators.pq.pq_search_rerank  (flat product-quantizer codes: ADC
+            shortlist + exact re-rank)
+    sq      operators.sq.sq_search_rerank  (flat int8 codes: asymmetric
+            shortlist + exact re-rank)
     ivfbq   operators.bq.ivfbq_search      (coarse-quantized packed binary
             codes + exact re-rank — the EP5 composed scale star)
+    ivfpq   operators.pq.ivfpq_search      (IVF cells x PQ codes, FAISS IVFPQ)
+    ivfsq   operators.sq.ivfsq_search      (IVF cells x int8 codes, FAISS
+            IVFScalarQuantizer)
     auto    operators.filtered             (where= chooser: EP8's measured
             exact-vs-widened-IVF rule)
+    mmr     operators.rerank.mmr_rerank    (exact-cosine shortlist, greedy
+            maximal-marginal-relevance selection)
+    hybrid  operators.bm25.rrf_fuse        (BM25 over the postings artifact
+            fused with the dense channel by reciprocal rank)
+
+The six quantized modes (bq/pq/sq, each flat or IVF) share one codec table
+(codec_table.py): one build, append, serve, calibrate and drift-check path.
 
 Text queries are encoded with the same (pluggable) encoder used at add
 time (V1/V6). Unlike ChromaDB — where every collection owns a private HNSW
@@ -35,6 +51,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .codec_table import CODECS, MODES, CodeLayout, code_layout, layout_of
 from .io.local import local_df
 from .operators.embedding import DEFAULT_DIM, embed_documents
 from .operators.knn import exact_knn
@@ -211,12 +228,8 @@ class VectorStore:
         # inline path keeps them bounded, but add(defer_maintenance=True)
         # accrues debt here instead (VERDICT r11 #5) — optimize() is the
         # explicit cadence that clears it
-        for _fam, root in (
-            ("bq", self._bq_path(name)),
-            ("pq", self._pq_path(name)),
-            ("sq", self._sq_path(name)),
-        ):
-            codes = os.path.join(root, "codes")
+        for fam in CODECS:
+            codes = self._code_layout(name, fam, "flat").codes
             self._heal_on_read(codes)
             self._maybe_compact_codes(codes)
         # graph deferred-write buffer (VERDICT r12 #4): fold buffered
@@ -231,7 +244,7 @@ class VectorStore:
         # past the threshold — same cadence contract as the flat codes
         ivf_root = self._ivf_path(name)
         if os.path.exists(os.path.join(ivf_root, "_meta.json")):
-            for _key, sub in self._IVF_CELL_TABLES:
+            for sub in self._IVF_CELL_TABLES:
                 p = os.path.join(ivf_root, sub)
                 st = self._cell_table_stats(p)
                 if st is not None and st["files"] > st["cells"]:
@@ -263,10 +276,10 @@ class VectorStore:
             out["graph"] = {"pending_files": n, "due": n > 0}
         ivf_root = self._ivf_path(name)
         if os.path.exists(os.path.join(ivf_root, "_meta.json")):
-            for key, sub in self._IVF_CELL_TABLES:
+            for sub in self._IVF_CELL_TABLES:
                 st = self._cell_table_stats(os.path.join(ivf_root, sub))
                 if st is not None:
-                    out["ivf"][key] = st
+                    out["ivf"][sub] = st
         if self._mtlsh_is_incremental(name):
             from .operators.mtlsh import (
                 AUTO_COMPACT_APPENDS,
@@ -279,12 +292,8 @@ class VectorStore:
                 "pending_gens": pending,
                 "due": pending >= AUTO_COMPACT_APPENDS,
             }
-        for fam, root in (
-            ("bq", self._bq_path(name)),
-            ("pq", self._pq_path(name)),
-            ("sq", self._sq_path(name)),
-        ):
-            codes = os.path.join(root, "codes")
+        for fam in CODECS:
+            codes = self._code_layout(name, fam, "flat").codes
             if os.path.isdir(codes) or os.path.isdir(
                 codes + "._pre_compact"
             ):
@@ -429,7 +438,7 @@ class VectorStore:
         # rows are scan waste, not answers, and the new vector's true
         # buckets append in _freshen_indexes (compaction drops the
         # superseded gens). Pre-contract mtlsh artifacts still drop.
-        inval = [".bq_index", ".dedup_index", ".pq_index", ".sq_index"]
+        inval = [".dedup_index", *(f".{fam}_index" for fam in CODECS)]
         if not self._mtlsh_is_incremental(name):
             inval.append(".mtlsh_index")
         else:
@@ -511,11 +520,12 @@ class VectorStore:
                 dirs.append(".mtlsh_index")
             from .operators.drift import drift_path
 
-            for d, p in ((".bq_index", self._bq_path(name)),
-                         (".pq_index", self._pq_path(name)),
-                         (".sq_index", self._sq_path(name))):
-                if os.path.exists(p) and not os.path.exists(drift_path(p)):
-                    dirs.append(d)
+            for fam in CODECS:
+                lay = self._code_layout(name, fam, "flat")
+                if os.path.exists(lay.root) and not os.path.exists(
+                    drift_path(lay.drift)
+                ):
+                    dirs.append(f".{fam}_index")
             self._invalidate_indexes(name, dirs=tuple(dirs))
         return docs
 
@@ -534,13 +544,10 @@ class VectorStore:
         artifacts."""
         ip = self._freshen_intent_path(name)
         if os.path.exists(ip):
-            self._invalidate_indexes(
-                name,
-                dirs=(".graph_index", ".graph_pending", ".ivf_index",
-                      ".postings_index", ".dedup_index", ".bq_index",
-                      ".pq_index", ".sq_index", ".mtlsh_index"),
-            )
-            os.remove(ip)
+            from .io.commitproto import clear_marker
+
+            self._invalidate_indexes(name, dirs=self._INDEX_DIRS)
+            clear_marker(ip)
 
     # flat code tables gain ~one file per append batch; past this many
     # parquet files the NEXT write compacts the codes dir inline (narrow
@@ -573,15 +580,10 @@ class VectorStore:
 
             compact_table(self.spark, codes)
 
-    # IVF cell-partitioned tables under the collection's index root, as
-    # (report key, subdirectory) pairs — the deferral valve's append
-    # targets and maintenance_due()'s inventory (VERDICT r12 #4)
-    _IVF_CELL_TABLES = (
-        ("corpus", "corpus"),
-        ("bqcodes", "bqcodes"),
-        ("sqcodes", "sqcodes"),
-        ("pqcodes", "pqcodes"),
-    )
+    # IVF cell-partitioned tables under the collection's index root (the
+    # subdirectory doubles as the report key) — the deferral valve's
+    # append targets and maintenance_due()'s inventory (VERDICT r12 #4)
+    _IVF_CELL_TABLES = ("corpus", *(f"{fam}codes" for fam in CODECS))
 
     def _cell_table_stats(self, path: str) -> dict | None:
         """{"cells", "files", "max_files_per_cell", "due"} for a
@@ -628,7 +630,7 @@ class VectorStore:
             .parquet(path)
         )
 
-    def _defer_ivf_maintenance(self, ivf_root: str, docs: DataFrame) -> None:
+    def _defer_ivf_maintenance(self, name: str, docs: DataFrame) -> None:
         """Deferral valve, IVF surface (VERDICT r12 #4): the inline path
         REWRITES every cell directory the batch touches — and re-encodes
         those whole cells into each composed code table — which is
@@ -643,10 +645,6 @@ class VectorStore:
         compacted by optimize(). Drift bookkeeping is identical to the
         inline path: coarse assignment error plus each present family's
         reconstruction error under its frozen parameters."""
-        import json
-
-        import numpy as np
-
         from .operators.ann import ivf_assign
         from .operators.drift import (
             drift_path,
@@ -654,6 +652,7 @@ class VectorStore:
             record_batch_qerr,
         )
 
+        ivf_root = self._ivf_path(name)
         corpus_path = os.path.join(ivf_root, "corpus")
         cents = self.spark.read.parquet(os.path.join(ivf_root, "centroids"))
         track = os.path.exists(drift_path(ivf_root))
@@ -675,79 +674,20 @@ class VectorStore:
             .parquet(corpus_path)
         )
 
-        def _append(enc: DataFrame, sub: str) -> None:
+        for fam, codec in CODECS.items():
+            lay = self._code_layout(name, fam, "ivf")
+            if not os.path.exists(lay.meta):
+                continue
+            p = codec.load(lay)
+            enc = codec.encode(assigned, p, passthrough=("cell",))
             (
                 enc.repartition("cell")
-                .sortWithinPartitions(enc.columns[0])
+                .sortWithinPartitions("item_id")
                 .write.mode("append")
                 .partitionBy("cell")
-                .parquet(os.path.join(ivf_root, sub))
+                .parquet(lay.codes)
             )
-
-        bq_meta = os.path.join(ivf_root, "_bq_meta.json")
-        if os.path.exists(bq_meta):
-            from .operators.bq import bq_encode, bq_recon_qerr
-
-            with open(bq_meta) as f:
-                m = json.load(f)
-            sums = np.array(m["sums"], dtype=np.int64)
-            _append(
-                bq_encode(
-                    assigned, sums, int(m["n"]), item_id="id",
-                    passthrough=("cell",),
-                ),
-                "bqcodes",
-            )
-            if "lo" in m:
-                qm, qn = mean_coarse_qerr(
-                    docs.select(
-                        bq_recon_qerr(
-                            F.col("embedding"), sums, int(m["n"]),
-                            np.array(m["lo"]), np.array(m["hi"]),
-                        ).alias("_qerr")
-                    )
-                )
-                record_batch_qerr(os.path.join(ivf_root, "bqcodes"), qm, qn)
-        sq_meta = os.path.join(ivf_root, "_sq_meta.json")
-        if os.path.exists(sq_meta):
-            from .operators.sq import sq_encode, sq_recon_qerr
-
-            with open(sq_meta) as f:
-                sm = json.load(f)
-            svmin = np.array(sm["vmin"], dtype=np.float64)
-            sscale = np.array(sm["scale"], dtype=np.float64)
-            _append(
-                sq_encode(
-                    assigned, svmin, sscale, item_id="id",
-                    passthrough=("cell",),
-                ),
-                "sqcodes",
-            )
-            qm, qn = mean_coarse_qerr(
-                docs.select(
-                    sq_recon_qerr(
-                        F.col("embedding"), svmin, sscale
-                    ).alias("_qerr")
-                )
-            )
-            record_batch_qerr(os.path.join(ivf_root, "sqcodes"), qm, qn)
-        pq_meta = os.path.join(ivf_root, "_pq_meta.json")
-        if os.path.exists(pq_meta):
-            from .operators.pq import pq_encode
-
-            books = np.load(os.path.join(ivf_root, "pq_books.npy"))
-            pqc = os.path.join(ivf_root, "pqcodes")
-            track_pq = os.path.exists(drift_path(pqc))
-            enc = pq_encode(
-                assigned, books, item_id="id", passthrough=("cell",),
-                keep_qerr="_qerr" if track_pq else None,
-            )
-            if track_pq:
-                enc = enc.localCheckpoint(eager=True)
-                qm, qn = mean_coarse_qerr(enc)
-                record_batch_qerr(pqc, qm, qn)
-                enc = enc.drop("_qerr")
-            _append(enc, "pqcodes")
+            self._record_batch_qerr(codec, lay, docs, p)
 
     def _freshen_indexes(
         self, name: str, docs: DataFrame, defer_maintenance: bool = False
@@ -770,13 +710,11 @@ class VectorStore:
         index for lazy rebuild from the already-landed collection rows
         (correct by construction), then absorb this batch; unmark only
         after every index absorbed it."""
-        import json
-
         # torn prior freshen: the collection rows are durable (landed
         # before _freshen_indexes), the derived artifacts may not be
         self._heal_torn_freshen(name)
         ip = self._freshen_intent_path(name)
-        from .io.commitproto import publish_marker
+        from .io.commitproto import clear_marker, publish_marker
 
         publish_marker(ip, {"stage": "freshen-in-flight"})
 
@@ -799,112 +737,11 @@ class VectorStore:
                 )
             else:
                 self._fold_graph_pending(name, batch)
-        ivf_root = self._ivf_path(name)
-        if defer_maintenance and os.path.exists(
-            os.path.join(ivf_root, "_meta.json")
-        ):
-            self._defer_ivf_maintenance(ivf_root, docs)
-        elif os.path.exists(os.path.join(ivf_root, "_meta.json")):
-            from .operators.ann import ivf_index_upsert
-
-            corpus_path = os.path.join(ivf_root, "corpus")
-            cents = self.spark.read.parquet(os.path.join(ivf_root, "centroids"))
-            cells = ivf_index_upsert(
-                self.spark, corpus_path, docs, cents, item_id="id"
-            )
-            bq_meta = os.path.join(ivf_root, "_bq_meta.json")
-            if os.path.exists(bq_meta):
-                import numpy as np
-
-                from .operators.bq import ivfbq_codes_upsert
-
-                with open(bq_meta) as f:
-                    m = json.load(f)
-                ivfbq_codes_upsert(
-                    self.spark, corpus_path,
-                    os.path.join(ivf_root, "bqcodes"),
-                    np.array(m["sums"], dtype=np.int64), int(m["n"]),
-                    cells, item_id="id",
-                )
-                if "lo" in m:  # fine-quantizer drift (EP13, VERDICT r08 #2)
-                    from .operators.bq import bq_recon_qerr
-                    from .operators.drift import (
-                        mean_coarse_qerr,
-                        record_batch_qerr,
-                    )
-
-                    qm, qn = mean_coarse_qerr(
-                        docs.select(
-                            bq_recon_qerr(
-                                F.col("embedding"),
-                                np.array(m["sums"], dtype=np.int64),
-                                int(m["n"]),
-                                np.array(m["lo"]), np.array(m["hi"]),
-                            ).alias("_qerr")
-                        )
-                    )
-                    record_batch_qerr(
-                        os.path.join(ivf_root, "bqcodes"), qm, qn
-                    )
-            sq_meta = os.path.join(ivf_root, "_sq_meta.json")
-            if os.path.exists(sq_meta):
-                import numpy as np
-
-                from .operators.drift import (
-                    mean_coarse_qerr,
-                    record_batch_qerr,
-                )
-                from .operators.sq import ivfsq_codes_upsert, sq_recon_qerr
-
-                with open(sq_meta) as f:
-                    sm = json.load(f)
-                svmin = np.array(sm["vmin"], dtype=np.float64)
-                sscale = np.array(sm["scale"], dtype=np.float64)
-                ivfsq_codes_upsert(
-                    self.spark, corpus_path,
-                    os.path.join(ivf_root, "sqcodes"),
-                    svmin, sscale, cells, item_id="id",
-                )
-                qm, qn = mean_coarse_qerr(
-                    docs.select(
-                        sq_recon_qerr(
-                            F.col("embedding"), svmin, sscale
-                        ).alias("_qerr")
-                    )
-                )
-                record_batch_qerr(os.path.join(ivf_root, "sqcodes"), qm, qn)
-            pq_meta = os.path.join(ivf_root, "_pq_meta.json")
-            if os.path.exists(pq_meta):
-                import numpy as np
-
-                from .operators.pq import ivfpq_codes_upsert
-
-                ivfpq_codes_upsert(
-                    self.spark, corpus_path,
-                    os.path.join(ivf_root, "pqcodes"),
-                    np.load(os.path.join(ivf_root, "pq_books.npy")),
-                    cells, item_id="id",
-                )
-                from .operators.drift import (
-                    drift_path,
-                    mean_coarse_qerr,
-                    record_batch_qerr,
-                )
-                from .operators.pq import pq_encode
-
-                # fine-quantizer drift: the batch's reconstruction error
-                # under the frozen codebooks (skipped on pre-baseline
-                # artifacts — no extra batch job for them)
-                pqc = os.path.join(ivf_root, "pqcodes")
-                if os.path.exists(drift_path(pqc)):
-                    qm, qn = mean_coarse_qerr(
-                        pq_encode(
-                            docs.select("id", "embedding"),
-                            np.load(os.path.join(ivf_root, "pq_books.npy")),
-                            item_id="id", keep_qerr="_qerr",
-                        )
-                    )
-                    record_batch_qerr(pqc, qm, qn)
+        if os.path.exists(os.path.join(self._ivf_path(name), "_meta.json")):
+            if defer_maintenance:
+                self._defer_ivf_maintenance(name, docs)
+            else:
+                self._upsert_ivf_cells(name, docs)
         postings = self._postings_path(name)
         if os.path.exists(os.path.join(postings, "_META.json")):
             from .operators.postings import postings_upsert
@@ -945,92 +782,29 @@ class VectorStore:
                 compact_mt_lsh_index(self.spark, mtp)
         # flat code tables (VERDICT r08 #2): encode ONLY the batch with
         # the frozen quantizer params, append it, and fold the batch's
-        # reconstruction error into the drift accumulator — the encode
-        # pass the append already owes is also the drift measurement.
-        # Guarded on the drift baseline AND the family's _meta.json: the
-        # meta is each build's commit point (written last), so a crash
-        # between the baseline write and the meta write must route the
-        # next add() to lazy rebuild, not a FileNotFoundError here
-        # (ADVICE r09).
-        from .operators.drift import drift_path, mean_coarse_qerr, record_batch_qerr
+        # reconstruction error into the drift accumulator.
+        # Guarded on the drift baseline AND the family's meta: the meta is
+        # each build's commit point (published last), so a crash between
+        # the baseline write and the meta publish must route the next
+        # add() to lazy rebuild, not a FileNotFoundError here (ADVICE r09).
+        from .operators.drift import drift_path
 
-        bqp = self._bq_path(name)
-        if os.path.exists(drift_path(bqp)) and os.path.exists(
-            os.path.join(bqp, "_meta.json")
-        ):
-            import numpy as np
-
-            from .operators.bq import bq_encode, bq_recon_qerr
-
-            with open(os.path.join(bqp, "_meta.json")) as f:
-                m = json.load(f)
-            sums = np.array(m["sums"], dtype=np.int64)
+        for fam, codec in CODECS.items():
+            lay = self._code_layout(name, fam, "flat")
+            if not (
+                os.path.exists(drift_path(lay.drift))
+                and os.path.exists(lay.meta)
+            ):
+                continue
+            p = codec.load(lay)
             # roll back a crashed auto-compaction BEFORE appending: an
             # append into the (absent) swap window would create a codes
             # dir holding only this batch while the full table sat in
             # ._pre_compact — silent data loss on the serve path
-            self._heal_on_read(os.path.join(bqp, "codes"))
-            bq_encode(
-                docs, sums, int(m["n"]), item_id="id"
-            ).write.mode("append").parquet(os.path.join(bqp, "codes"))
-            self._maybe_compact_codes(
-                os.path.join(bqp, "codes"), defer=defer_maintenance
-            )
-            qm, qn = mean_coarse_qerr(
-                docs.select(
-                    bq_recon_qerr(
-                        F.col("embedding"), sums, int(m["n"]),
-                        np.array(m["lo"]), np.array(m["hi"]),
-                    ).alias("_qerr")
-                )
-            )
-            record_batch_qerr(bqp, qm, qn)
-        pqp = self._pq_path(name)
-        if os.path.exists(drift_path(pqp)) and os.path.exists(
-            os.path.join(pqp, "_meta.json")
-        ):
-            import numpy as np
-
-            from .operators.pq import pq_encode
-
-            enc = pq_encode(
-                docs, np.load(os.path.join(pqp, "books.npy")),
-                item_id="id", keep_qerr="_qerr",
-            ).localCheckpoint(eager=True)  # one kernel pass: agg + append
-            qm, qn = mean_coarse_qerr(enc)
-            self._heal_on_read(os.path.join(pqp, "codes"))  # see bq note
-            enc.write.mode("append").parquet(os.path.join(pqp, "codes"))
-            record_batch_qerr(pqp, qm, qn)
-            self._maybe_compact_codes(
-                os.path.join(pqp, "codes"), defer=defer_maintenance
-            )
-        sqp = self._sq_path(name)
-        if os.path.exists(drift_path(sqp)) and os.path.exists(
-            os.path.join(sqp, "_meta.json")
-        ):
-            import numpy as np
-
-            from .operators.sq import sq_encode, sq_recon_qerr
-
-            with open(os.path.join(sqp, "_meta.json")) as f:
-                p = json.load(f)
-            vmin = np.array(p["vmin"], dtype=np.float64)
-            scale = np.array(p["scale"], dtype=np.float64)
-            self._heal_on_read(os.path.join(sqp, "codes"))  # see bq note
-            sq_encode(
-                docs, vmin, scale, item_id="id"
-            ).write.mode("append").parquet(os.path.join(sqp, "codes"))
-            self._maybe_compact_codes(
-                os.path.join(sqp, "codes"), defer=defer_maintenance
-            )
-            qm, qn = mean_coarse_qerr(
-                docs.select(
-                    sq_recon_qerr(F.col("embedding"), vmin, scale).alias(
-                        "_qerr"
-                    )
-                )
-            )
-            record_batch_qerr(sqp, qm, qn)
+            self._heal_on_read(lay.codes)
+            codec.encode(docs, p).write.mode("append").parquet(lay.codes)
+            self._maybe_compact_codes(lay.codes, defer=defer_maintenance)
+            self._record_batch_qerr(codec, lay, docs, p)
         dd = self._dedup_path(name)
         if os.path.exists(os.path.join(dd, "bands")):
             from .streaming.dedup_maintenance import (
@@ -1047,63 +821,108 @@ class VectorStore:
                 next_ingest_batch_id(dd), id_col="id", text_col="text",
                 maintain_clusters=True,
             )
-        os.remove(ip)
+        clear_marker(ip)
 
-    # -- binary-quantization codes (per-collection serving artifact) -------
+    # -- quantized code families (codec_table.py: bq/pq/sq x flat/IVF) -----
     def _bq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".bq_index", name)
+        return self._code_layout(name, "bq", "flat").root
 
-    def _ensure_bq_codes(self, name: str, corpus: DataFrame):
-        """Build (or reuse) the collection's packed-code table + exact-int
-        thresholds — the serving shape, so mode="bq" queries scan 16 B/row
-        instead of re-training and re-encoding the corpus per call. Any
-        write to the collection invalidates the artifact (pure function
-        of the corpus)."""
-        import json
+    def _pq_path(self, name: str) -> str:
+        return self._code_layout(name, "pq", "flat").root
 
-        from .operators.bq import bq_encode, bq_recon_qerr, bq_side_means, bq_train
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
+    def _sq_path(self, name: str) -> str:
+        return self._code_layout(name, "sq", "flat").root
 
-        path = self._bq_path(name)
-        meta = os.path.join(path, "_meta.json")
-        codes = os.path.join(path, "codes")
-        # codes dirs are now auto-compacted by the staged-swap rewrite
-        # (_maybe_compact_codes); a crash between its two renames leaves
-        # the data in full at ._pre_compact — roll back before any read,
-        # same as the collection's own read path
-        self._heal_on_read(codes)
-        if not os.path.exists(meta):
-            sums, n = bq_train(corpus, item_vec="embedding", dim=self.dim)
-            lo, hi = bq_side_means(corpus, sums, n, item_vec="embedding")
-            os.makedirs(path, exist_ok=True)
-            bq_encode(corpus, sums, n, item_id="id").write.mode(
-                "overwrite"
-            ).parquet(codes)
-            # EP13 drift baseline for the frozen 1-bit quantizer: mean
-            # reconstruction error under the side-mean decode
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                corpus.select(
-                    bq_recon_qerr(
-                        F.col("embedding"), sums, n, lo, hi
-                    ).alias("_qerr")
-                )
-            )
-            write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"sums": [int(x) for x in sums], "n": n,
-                     "lo": [float(x) for x in lo],
-                     "hi": [float(x) for x in hi]}, f,
-                )
-        with open(meta) as f:
-            m = json.load(f)
-        import numpy as np
-
-        return (
-            self.spark.read.parquet(codes),
-            np.array(m["sums"], dtype=np.int64),
-            int(m["n"]),
+    def _code_layout(self, name: str, fam: str, layout: str) -> CodeLayout:
+        if layout == "ivf":
+            return code_layout(self._ivf_path(name), fam, ivf=True)
+        return code_layout(
+            os.path.join(self.root, f".{fam}_index", name), fam, ivf=False
         )
+
+    def _ensure_codes(self, name: str, fam: str, layout: str):
+        """Build (or reuse) one quantized family's serving artifact — the
+        frozen quantizer params plus the code table, so queries scan codes
+        instead of re-training and re-encoding the corpus per call.
+        Returns (CodeLayout, params).
+
+        Flat tables (layout="flat") are whole-corpus artifacts: any
+        replacing write invalidates them and add() appends batch codes
+        under the frozen params. IVF tables (layout="ivf", the FAISS
+        IndexBinaryIVF / IVFPQ / IVFScalarQuantizer shapes) are
+        partitioned by the IVF layout's cells: directory pruning from the
+        coarse quantizer x a compressed scan inside each probed directory;
+        add() re-encodes only the touched cells.
+
+        The build runs heal, train, encode, drift baseline, then the meta
+        commit LAST through the commit seam: the meta marks the artifact
+        built, so a crash anywhere before it leaves no meta (never a torn
+        one) and the next call rebuilds."""
+        from .io.commitproto import publish_marker
+        from .operators.drift import write_drift_baseline
+
+        codec = CODECS[fam]
+        lay = self._code_layout(name, fam, layout)
+        if not lay.ivf:
+            # codes dirs are auto-compacted by the staged-swap rewrite
+            # (_maybe_compact_codes); a crash between its two renames
+            # leaves the data in full at ._pre_compact — roll back before
+            # any read, same as the collection's own read path
+            self._heal_on_read(lay.codes)
+        if not os.path.exists(lay.meta):
+            # an IVF family trains on the cell layout it is published in
+            src = (
+                self.spark.read.parquet(self._ensure_ivf_index(name)[0])
+                if lay.ivf else self.get(name)
+            )
+            p = codec.train(src, self.dim)
+            os.makedirs(lay.root, exist_ok=True)
+            meta = codec.dump(p, lay)
+            if lay.ivf:
+                codec.ivf_write(src, p, lay.codes)
+            else:
+                codec.encode(src, p).write.mode("overwrite").parquet(lay.codes)
+            # EP13 fine-quantizer baseline: the error of the frozen params
+            # on the training corpus, which every absorbed batch's error
+            # is compared against (operators/drift.py)
+            write_drift_baseline(lay.drift, *codec.build_qerr(src, p, self.dim))
+            publish_marker(lay.meta, meta)
+        return lay, codec.load(lay)
+
+    def _read_codes(self, lay: CodeLayout) -> DataFrame:
+        # flat PQ tables built before the codec table carry a per-row
+        # reconstruction-error column; it is drift bookkeeping, not a code
+        return self.spark.read.parquet(lay.codes).drop("_qerr")
+
+    def _record_batch_qerr(self, codec, lay: CodeLayout, docs, p) -> None:
+        """Fold a batch's fine-quantizer error under the frozen params
+        into the family's drift accumulator. Skipped — no extra batch job
+        — for artifacts built before their baseline existed."""
+        from .operators.drift import drift_path, record_batch_qerr
+
+        if os.path.exists(drift_path(lay.drift)):
+            q = codec.batch_qerr(docs, p)
+            if q is not None:
+                record_batch_qerr(lay.drift, *q)
+
+    def _upsert_ivf_cells(self, name: str, docs: DataFrame) -> None:
+        """Inline IVF maintenance: upsert the batch into the cell layout
+        (only the landed cell directories rewrite), then re-encode exactly
+        those cells into every built code table with its frozen params —
+        codes are a pure function of the corpus layout, so they stay in
+        lockstep — and measure the batch's fine-quantizer drift."""
+        from .operators.ann import ivf_index_upsert
+
+        corpus_path, cents = self._ensure_ivf_index(name)
+        cells = ivf_index_upsert(
+            self.spark, corpus_path, docs, cents, item_id="id"
+        )
+        for fam, codec in CODECS.items():
+            lay = self._code_layout(name, fam, "ivf")
+            if os.path.exists(lay.meta):
+                p = codec.load(lay)
+                codec.ivf_upsert(self.spark, corpus_path, lay.codes, p, cells)
+                self._record_batch_qerr(codec, lay, docs, p)
 
     # -- IVF layout + centroids (per-collection, the 100 TB scan shape) ----
     def _ivf_path(self, name: str) -> str:
@@ -1112,22 +931,21 @@ class VectorStore:
     def _ensure_ivf_index(self, name: str):
         """Build (or reuse) the collection's cell-partitioned IVF layout +
         centroid table — the serving shape for mode="auto" (filtered
-        chooser) and mode="ivfbq". Built lazily on first use; add()/
-        upsert() keep it fresh via ivf_index_upsert (only the landed cell
-        directories rewrite). Returns (corpus_path, centroids DataFrame).
+        chooser) and the ivfbq/ivfpq/ivfsq code tables. Built lazily on
+        first use; add()/upsert() keep it fresh via ivf_index_upsert (only
+        the landed cell directories rewrite). Returns (corpus_path,
+        centroids DataFrame).
 
         n_cells ~ sqrt(N) (the classic IVF occupancy dial), clamped to
         [4, 256]; centroids train on a seeded sample when the collection
         is large (the coarse quantizer needs ~hundreds of points per
         cell, not the corpus)."""
-        import json
-
+        from .io.commitproto import publish_marker
         from .operators.ann import (
             ivf_assign_blas,
             kmeans_centroids,
             write_ivf_corpus,
         )
-
         from .operators.drift import mean_coarse_qerr, write_drift_baseline
 
         path = self._ivf_path(name)
@@ -1160,8 +978,7 @@ class VectorStore:
             qerr_mean, qerr_n = mean_coarse_qerr(assigned, "_qerr")
             write_ivf_corpus(assigned.drop("_qerr"), corpus_path)
             write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump({"n_cells": n_cells}, f)
+            publish_marker(meta, {"n_cells": n_cells})
         return corpus_path, self.spark.read.parquet(cents_path)
 
     def _collection_nrows(self, name: str) -> int:
@@ -1240,38 +1057,21 @@ class VectorStore:
         from .operators.probetune import (
             DEFAULT_N_SAMPLE,
             SHORTLIST_FILE,
-            bq_shortlist_curve,
             curve_is_stale,
-            pq_shortlist_curve,
             read_curve_meta,
-            sq_shortlist_curve,
             write_probe_curve,
         )
 
-        root = {"bq": self._bq_path, "pq": self._pq_path, "sq": self._sq_path}[
-            fam
-        ](name)
+        root = self._code_layout(name, fam, "flat").root
         fname = self._k_fname(SHORTLIST_FILE, k)
-        corpus = self.get(name)
         n = self._collection_nrows(name)
         meta = read_curve_meta(root, fname)
         if not curve_is_stale(meta, n, k=k):
             return {int(s): float(r) for s, r in meta["curve"].items()}
-        if fam == "bq":
-            encoded, sums, bn = self._ensure_bq_codes(name, corpus)
-            curve = bq_shortlist_curve(
-                corpus, encoded, sums, bn, k=k, item_id="id"
-            )
-        elif fam == "pq":
-            encoded, books = self._ensure_pq_codes(name, corpus)
-            curve = pq_shortlist_curve(
-                corpus, encoded, books, k=k, item_id="id"
-            )
-        else:
-            encoded, vmin, scale = self._ensure_sq_codes(name, corpus)
-            curve = sq_shortlist_curve(
-                corpus, encoded, vmin, scale, k=k, item_id="id"
-            )
+        lay, p = self._ensure_codes(name, fam, "flat")
+        curve = CODECS[fam].shortlist_curve(
+            self.get(name), self._read_codes(lay), p, k
+        )
         write_probe_curve(
             root, curve, k, DEFAULT_N_SAMPLE, n_corpus=n,
             fname=fname,
@@ -1313,16 +1113,9 @@ class VectorStore:
         staleness, same as every curve."""
         from .functions.hashing import portable_hash64
         from .io.commitproto import publish_marker
-        from .operators.probetune import (
-            bq_shortlist_curve,
-            curve_is_stale,
-            pq_shortlist_curve,
-            read_curve_meta,
-            sq_shortlist_curve,
-        )
+        from .operators.probetune import curve_is_stale, read_curve_meta
 
-        root = {"bq": self._bq_path, "pq": self._pq_path,
-                "sq": self._sq_path}[fam](name)
+        root = self._code_layout(name, fam, "flat").root
         fname = self._k_fname("_filtered_shortlist_curve.json", k)
         n = self._collection_nrows(name)
         full = self._ensure_flat_shortlist_curve(name, fam, k=k)
@@ -1344,12 +1137,8 @@ class VectorStore:
             bins[1.0] = full
             return bins
         corpus = self.get(name)
-        if fam == "bq":
-            encoded, sums, bn = self._ensure_bq_codes(name, corpus)
-        elif fam == "pq":
-            encoded, books = self._ensure_pq_codes(name, corpus)
-        else:
-            encoded, vmin, scale = self._ensure_sq_codes(name, corpus)
+        lay, p = self._ensure_codes(name, fam, "flat")
+        encoded = self._read_codes(lay)
         bins, skipped = {}, []
         for f in self._FILTERED_BINS:
             thresh = int(f * 1000)
@@ -1377,18 +1166,7 @@ class VectorStore:
                     F.lit(1000),
                 ) < thresh
             )
-            if fam == "bq":
-                bins[f] = bq_shortlist_curve(
-                    surv, surv_enc, sums, bn, k=k, item_id="id"
-                )
-            elif fam == "pq":
-                bins[f] = pq_shortlist_curve(
-                    surv, surv_enc, books, k=k, item_id="id"
-                )
-            else:
-                bins[f] = sq_shortlist_curve(
-                    surv, surv_enc, vmin, scale, k=k, item_id="id"
-                )
+            bins[f] = CODECS[fam].shortlist_curve(surv, surv_enc, p, k)
         publish_marker(
             os.path.join(root, fname),
             {
@@ -1555,8 +1333,6 @@ class VectorStore:
         table). Keying by k is VERDICT r10 #1: a (n_probe, shortlist)
         pair certified for recall@10 under-delivers at k=25 — the deeper
         ground truth reaches more cells and deeper approximate ranks."""
-        import numpy as np
-
         from .io.commitproto import publish_marker
         from .operators.probetune import (
             composed_serving_budget,
@@ -1577,59 +1353,14 @@ class VectorStore:
         if not stale and key in meta.get("targets", {}):
             return meta["targets"][key]
         probe_curve = self._ensure_probe_curve(name, k=k)
-        if mode == "ivfbq":
-            from .operators.bq import bq_encode, hamming
+        fam, _ = MODES[mode]
+        lay, p = self._ensure_codes(name, fam, "ivf")
 
-            codes_path, _, _, sums, bn = self._ensure_ivfbq_codes(name)
-
-            def scored(qs, cells):
-                codes = self.spark.read.parquet(codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                qcodes = bq_encode(
-                    qs, sums, bn, item_id="query_id", item_vec="query_vec"
-                ).select(
-                    F.col("item_id").alias("query_id"),
-                    F.col("code_lo").alias("q_lo"),
-                    F.col("code_hi").alias("q_hi"),
-                )
-                return codes.crossJoin(F.broadcast(qcodes)).select(
-                    "query_id", "item_id", "cell",
-                    hamming(
-                        F.col("q_lo"), F.col("q_hi"),
-                        F.col("code_lo"), F.col("code_hi"),
-                    ).cast("double").alias("adist"),
-                )
-
-        elif mode == "ivfsq":
-            from .operators.sq import sq_search
-
-            codes_path, _, _, svmin, sscale = self._ensure_ivfsq_codes(name)
-
-            def scored(qs, cells):
-                codes = self.spark.read.parquet(codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                ranked = sq_search(
-                    qs, codes, svmin, sscale, k=1 << 30
-                ).select(
-                    "query_id", "item_id", F.col("sq_dist").alias("adist")
-                )
-                return ranked.join(codes.select("item_id", "cell"), "item_id")
-
-        else:
-            from .operators.pq import pq_search
-
-            codes_path, _, _, books = self._ensure_ivfpq_codes(name)
-
-            def scored(qs, cells):
-                codes = self.spark.read.parquet(codes_path).filter(
-                    F.col("cell").isin(cells)
-                )
-                ranked = pq_search(qs, codes, books, k=1 << 30).select(
-                    "query_id", "item_id", F.col("adc_dist").alias("adist")
-                )
-                return ranked.join(codes.select("item_id", "cell"), "item_id")
+        def scored(qs, cells):
+            codes = self.spark.read.parquet(lay.codes).filter(
+                F.col("cell").isin(cells)
+            )
+            return CODECS[fam].scored(qs, codes, p)
 
         b = composed_serving_budget(
             self.spark, corpus_path, cents, scored,
@@ -1653,14 +1384,15 @@ class VectorStore:
         return entry
 
     def _resolve_shortlist(
-        self, name: str, fam: str, k: int, shortlist: int | None
+        self, name: str, fam: str, k: int, shortlist: int | None,
+        target: float | None = None,
     ) -> int:
         """Serving shortlist for a flat code family: the caller's explicit
-        value, else the smallest calibrated budget meeting
-        DEFAULT_TARGET_RECALL (VERDICT r08 #1 — the default is measured,
-        not guessed; until round 9 it was the max(10k, 100) folklore
-        constant, which measured 0.56-0.68 recall at sf0.1). The curve
-        is calibrated AT the requested k (VERDICT r10 #1), so the k
+        value, else the smallest calibrated budget meeting ``target``
+        (default DEFAULT_TARGET_RECALL — VERDICT r08 #1: the default is
+        measured, not guessed; until round 9 it was the max(10k, 100)
+        folklore constant, which measured 0.56-0.68 recall at sf0.1). The
+        curve is calibrated AT the requested k (VERDICT r10 #1), so the k
         floor below is a structural guard, not the certification."""
         if shortlist is not None:
             return shortlist
@@ -1671,27 +1403,28 @@ class VectorStore:
 
         return max(k, choose_shortlist(
             self._ensure_flat_shortlist_curve(name, fam, k=k),
-            DEFAULT_TARGET_RECALL,
+            DEFAULT_TARGET_RECALL if target is None else target,
             self._collection_nrows(name),
         ))
 
     def _resolve_composed(
         self, name: str, mode: str, n_probe: int | None,
-        shortlist: int | None, k: int = 10,
+        shortlist: int | None, k: int = 10, target: float | None = None,
     ) -> tuple[int, int]:
-        """Serving (n_probe, shortlist) for ivfbq/ivfpq: explicit values
+        """Serving (n_probe, shortlist) for the ivf* modes: explicit values
         win; anything unspecified comes from the measured joint budget at
-        DEFAULT_TARGET_RECALL, calibrated AT the requested k (VERDICT
-        r10 #1). The measured shortlist still floors at k so a re-rank
-        pool can never return <k rows (ADVICE r09) — a structural
-        guard; the recall certification now comes from the k-keyed
-        curve itself."""
+        ``target`` (default DEFAULT_TARGET_RECALL), calibrated AT the
+        requested k (VERDICT r10 #1). The measured shortlist still floors
+        at k so a re-rank pool can never return <k rows (ADVICE r09) — a
+        structural guard; the recall certification now comes from the
+        k-keyed curve itself."""
         if n_probe is not None and shortlist is not None:
             return n_probe, shortlist
         from .operators.probetune import DEFAULT_TARGET_RECALL
 
         b = self._ensure_composed_budget(
-            name, mode, DEFAULT_TARGET_RECALL, k=k
+            name, mode, DEFAULT_TARGET_RECALL if target is None else target,
+            k=k,
         )
         return (
             n_probe if n_probe is not None else b["n_probe"],
@@ -1707,7 +1440,7 @@ class VectorStore:
         through it), and ``"families"`` maps each of the six quantized
         families to its own {"train_mean_qerr", "upsert_mean_qerr",
         "ratio", "retrain_recommended", ...} — ivf (coarse assignment
-        error), ivfbq/ivfpq (fine reconstruction error of the
+        error), ivfbq/ivfpq/ivfsq (fine reconstruction error of the
         cell-partitioned code twins), bq/pq/sq (reconstruction error of
         the flat code tables, accumulated by the O(batch) append encode).
         A family with no built artifact or no baseline reports {}. Past
@@ -1716,15 +1449,11 @@ class VectorStore:
 
         ivf_root = self._ivf_path(name)
         st = dict(drift_status(ivf_root))
-        st["families"] = {
-            "ivf": drift_status(ivf_root),
-            "ivfbq": drift_status(os.path.join(ivf_root, "bqcodes")),
-            "ivfpq": drift_status(os.path.join(ivf_root, "pqcodes")),
-            "ivfsq": drift_status(os.path.join(ivf_root, "sqcodes")),
-            "bq": drift_status(self._bq_path(name)),
-            "pq": drift_status(self._pq_path(name)),
-            "sq": drift_status(self._sq_path(name)),
-        }
+        st["families"] = {"ivf": drift_status(ivf_root)}
+        for mode, (fam, layout) in MODES.items():
+            st["families"][mode] = drift_status(
+                self._code_layout(name, fam, layout).drift
+            )
         return st
 
     def retrain_quantizers(self, name: str, families=None) -> None:
@@ -1734,243 +1463,15 @@ class VectorStore:
         and the recall the drift eroded (pinned in tests/test_drift.py).
 
         ``families``: iterable of {"ivf", "bq", "pq", "sq"} (the
-        composed ivfbq/ivfpq twins live under the IVF root and ride
+        composed ivfbq/ivfpq/ivfsq twins live under the IVF root and ride
         "ivf"); default None retrains all of them. Calibration curves
         live inside the dropped directories, so budgets re-measure with
         the fresh quantizers."""
-        fams = set(families) if families is not None else {"ivf", "bq", "pq", "sq"}
-        dirs = tuple(
-            d for f, d in (
-                ("ivf", ".ivf_index"), ("bq", ".bq_index"),
-                ("pq", ".pq_index"), ("sq", ".sq_index"),
-            ) if f in fams
+        every = ("ivf", *CODECS)
+        fams = set(families) if families is not None else set(every)
+        self._invalidate_indexes(
+            name, dirs=tuple(f".{f}_index" for f in every if f in fams)
         )
-        self._invalidate_indexes(name, dirs=dirs)
-
-    def _ensure_ivfbq_codes(self, name: str):
-        """Packed-code table over the IVF layout (FAISS IndexBinaryIVF
-        shape): directory pruning from the coarse quantizer x 16 B/row
-        Hamming scan inside each probed directory. Thresholds are frozen
-        at build; add()/upsert() re-encode only the touched cells
-        (ivfbq_codes_upsert). Returns (codes_path, corpus_path,
-        centroids, sums, n)."""
-        import json
-
-        import numpy as np
-
-        from .operators.bq import (
-            bq_recon_qerr,
-            bq_side_means,
-            bq_train,
-            write_ivfbq_codes,
-        )
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-
-        corpus_path, cents = self._ensure_ivf_index(name)
-        path = self._ivf_path(name)
-        codes_path = os.path.join(path, "bqcodes")
-        meta = os.path.join(path, "_bq_meta.json")
-        if not os.path.exists(meta):
-            assigned = self.spark.read.parquet(corpus_path)
-            sums, n = bq_train(assigned, item_vec="embedding", dim=self.dim)
-            lo, hi = bq_side_means(assigned, sums, n, item_vec="embedding")
-            write_ivfbq_codes(assigned, sums, n, codes_path, item_id="id")
-            # EP13 fine-quantizer baseline, published INSIDE the codes
-            # dir (dynamic cell overwrites never touch top-level files)
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                assigned.select(
-                    bq_recon_qerr(
-                        F.col("embedding"), sums, n, lo, hi
-                    ).alias("_qerr")
-                )
-            )
-            write_drift_baseline(codes_path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"sums": [int(x) for x in sums], "n": n,
-                     "lo": [float(x) for x in lo],
-                     "hi": [float(x) for x in hi]}, f,
-                )
-        with open(meta) as f:
-            m = json.load(f)
-        return (
-            codes_path,
-            corpus_path,
-            cents,
-            np.array(m["sums"], dtype=np.int64),
-            int(m["n"]),
-        )
-
-    # -- flat PQ / SQ code tables (per-collection serving artifacts) -------
-    def _pq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".pq_index", name)
-
-    def _ensure_pq_codes(self, name: str, corpus: DataFrame):
-        """Build (or reuse) the collection's flat PQ code table +
-        persisted codebooks — the serving shape for mode="pq" (ADC
-        short-list + exact re-rank, operators/pq.py). Same whole-corpus
-        discipline as the flat bq codes: any write invalidates (pure
-        function of the corpus), rebuild is lazy. Returns
-        (codes DataFrame, codebooks ndarray)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-        from .operators.pq import pq_encode, pq_train
-
-        path = self._pq_path(name)
-        meta = os.path.join(path, "_meta.json")
-        codes = os.path.join(path, "codes")
-        books_path = os.path.join(path, "books.npy")
-        self._heal_on_read(codes)  # crashed auto-compaction rollback
-        if not os.path.exists(meta):
-            m = 8 if self.dim % 8 == 0 else 4
-            books = pq_train(corpus, item_vec="embedding", m=m, k=16)
-            os.makedirs(path, exist_ok=True)
-            np.save(books_path, books)
-            # the encode kernel computes every sub-space distance anyway;
-            # keeping the reconstruction error costs one extra column and
-            # gives the EP13 drift baseline for the frozen codebooks
-            pq_encode(
-                corpus, books, item_id="id", keep_qerr="_qerr"
-            ).write.mode("overwrite").parquet(codes)
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                self.spark.read.parquet(codes)
-            )
-            write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump({"m": m, "k": 16}, f)
-        return (
-            self.spark.read.parquet(codes).drop("_qerr"),
-            np.load(books_path),
-        )
-
-    def _sq_path(self, name: str) -> str:
-        return os.path.join(self.root, ".sq_index", name)
-
-    def _ensure_sq_codes(self, name: str, corpus: DataFrame):
-        """Build (or reuse) the collection's flat SQ(int8) code table +
-        persisted per-dimension (vmin, scale) — the serving shape for
-        mode="sq". Params persist beside the codes (the ivfbq_params
-        pattern: serve does O(1) work, never re-runs the corpus min/max
-        aggregate; JSON float round-trip is exact — shortest-repr
-        doubles). Returns (codes DataFrame, vmin, scale)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import write_drift_baseline
-        from .operators.sq import sq_encode, sq_holdout_qerr, sq_train
-
-        path = self._sq_path(name)
-        meta = os.path.join(path, "_meta.json")
-        codes = os.path.join(path, "codes")
-        self._heal_on_read(codes)  # crashed auto-compaction rollback
-        if not os.path.exists(meta):
-            vmin, scale = sq_train(corpus, item_vec="embedding", dim=self.dim)
-            os.makedirs(path, exist_ok=True)
-            sq_encode(corpus, vmin, scale, item_id="id").write.mode(
-                "overwrite"
-            ).parquet(codes)
-            # EP13 drift baseline for the frozen affine params, measured
-            # OUT-OF-SAMPLE (sq_holdout_qerr): the training rows never
-            # clamp under params fit on exactly them, so an in-sample
-            # baseline fires the trigger on in-distribution appends
-            qerr_mean, qerr_n = sq_holdout_qerr(corpus, self.dim)
-            write_drift_baseline(path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"vmin": [float(x) for x in vmin],
-                     "scale": [float(x) for x in scale]}, f
-                )
-        with open(meta) as f:
-            p = json.load(f)
-        return (
-            self.spark.read.parquet(codes),
-            np.array(p["vmin"], dtype=np.float64),
-            np.array(p["scale"], dtype=np.float64),
-        )
-
-    def _ensure_ivfsq_codes(self, name: str):
-        """Int8 code table partitioned by the IVF layout's cells (FAISS
-        IVFScalarQuantizer shape): coarse-quantizer directory pruning ×
-        4× fewer bytes per row inside each probed directory,
-        near-lossless fidelity (EP5). Affine params freeze at build;
-        add()/upsert() re-encode only the touched cells
-        (ivfsq_codes_upsert — the same lockstep as the bq/pq twins).
-        Returns (codes_path, corpus_path, centroids, vmin, scale)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import write_drift_baseline
-        from .operators.sq import sq_holdout_qerr, sq_train, write_ivfsq_codes
-
-        corpus_path, cents = self._ensure_ivf_index(name)
-        path = self._ivf_path(name)
-        codes_path = os.path.join(path, "sqcodes")
-        meta = os.path.join(path, "_sq_meta.json")
-        if not os.path.exists(meta):
-            assigned = self.spark.read.parquet(corpus_path)
-            vmin, scale = sq_train(
-                assigned, item_vec="embedding", dim=self.dim
-            )
-            write_ivfsq_codes(assigned, vmin, scale, codes_path, item_id="id")
-            # EP13 fine-quantizer baseline (clipping error of the frozen
-            # affine params), published inside the codes dir — measured
-            # OUT-OF-SAMPLE (sq_holdout_qerr): in-sample never clamps
-            qerr_mean, qerr_n = sq_holdout_qerr(assigned, self.dim)
-            write_drift_baseline(codes_path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump(
-                    {"vmin": [float(x) for x in vmin],
-                     "scale": [float(x) for x in scale]}, f,
-                )
-        with open(meta) as f:
-            p = json.load(f)
-        return (
-            codes_path,
-            corpus_path,
-            cents,
-            np.array(p["vmin"], dtype=np.float64),
-            np.array(p["scale"], dtype=np.float64),
-        )
-
-    def _ensure_ivfpq_codes(self, name: str):
-        """PQ code table partitioned by the IVF layout's cells (FAISS
-        IVFPQ shape): coarse-quantizer directory pruning × ADC scan of
-        ~dim/m bytes per row inside each probed directory. Codebooks are
-        frozen at build; add()/upsert() re-encode only the touched cells
-        (ivfpq_codes_upsert, same lockstep as the bq twin). Returns
-        (codes_path, corpus_path, centroids, codebooks)."""
-        import json
-
-        import numpy as np
-
-        from .operators.drift import mean_coarse_qerr, write_drift_baseline
-        from .operators.pq import pq_encode, pq_train, write_ivfpq_codes
-
-        corpus_path, cents = self._ensure_ivf_index(name)
-        path = self._ivf_path(name)
-        codes_path = os.path.join(path, "pqcodes")
-        books_path = os.path.join(path, "pq_books.npy")
-        meta = os.path.join(path, "_pq_meta.json")
-        if not os.path.exists(meta):
-            assigned = self.spark.read.parquet(corpus_path)
-            m = 8 if self.dim % 8 == 0 else 4
-            books = pq_train(assigned, item_vec="embedding", m=m, k=16)
-            np.save(books_path, books)
-            write_ivfpq_codes(assigned, books, codes_path, item_id="id")
-            # EP13 fine-quantizer baseline (reconstruction error of the
-            # frozen codebooks), published inside the codes dir
-            qerr_mean, qerr_n = mean_coarse_qerr(
-                pq_encode(assigned, books, item_id="id", keep_qerr="_qerr")
-            )
-            write_drift_baseline(codes_path, qerr_mean, qerr_n)
-            with open(meta, "w") as f:
-                json.dump({"m": m, "k": 16}, f)
-        return codes_path, corpus_path, cents, np.load(books_path)
 
     def _ensure_lsh_bits_curve(self, name: str, k: int = 10) -> dict:
         """Measured recall-vs-probe-bits curve for mode="lsh" (VERDICT
@@ -2484,7 +1985,7 @@ class VectorStore:
                     "give target_recall= OR explicit n_probe=/shortlist= "
                     "budgets, not both"
                 )
-            if mode in ("bq", "pq", "sq"):
+            if layout_of(mode) == "flat":
                 if target_recall >= 1.0:
                     mode = "exact"
                 else:
@@ -2497,8 +1998,9 @@ class VectorStore:
                     else:
                         shortlist = s
                 target_recall = None
-            elif mode not in ("auto", "graph", "mtlsh", "lsh", "ivfbq",
-                              "ivfpq", "ivfsq"):
+            elif mode not in ("auto", "graph", "mtlsh", "lsh") and (
+                layout_of(mode) != "ivf"
+            ):
                 raise ValueError(
                     f"target_recall= with where= applies to the filtered-"
                     f"chooser modes (auto, or graph/mtlsh/lsh/ivfbq/ivfpq/"
@@ -2555,32 +2057,15 @@ class VectorStore:
                     f"target_recall= does not apply to mode={mode!r} — "
                     "exact scans and rank-fusion modes have no recall dial"
                 )
-            if mode in ("ivfbq", "ivfpq", "ivfsq"):
+            if mode in MODES:
+                # below 1.0 the serve path resolves the budget from the
+                # family's curve at this target; 1.0 is full re-rank (and
+                # full probe, which needs only the cell COUNT — no
+                # calibration pass for a guaranteed-exact config)
                 if target_recall >= 1.0:
-                    # full probe needs only the cell COUNT — no
-                    # calibration pass for a guaranteed-exact config
-                    _, cents = self._ensure_ivf_index(name)
-                    n_probe = cents.count()
                     shortlist = self._collection_nrows(name)
-                else:
-                    # curve calibrated AT the requested k (VERDICT r10
-                    # #1); the k floor stays as a structural row-count
-                    # guard (ADVICE r09)
-                    b = self._ensure_composed_budget(
-                        name, mode, target_recall, k=k
-                    )
-                    n_probe, shortlist = b["n_probe"], max(k, b["shortlist"])
-            elif mode in ("bq", "pq", "sq"):
-                from .operators.probetune import choose_shortlist
-
-                ncoll = self._collection_nrows(name)
-                if target_recall >= 1.0:
-                    shortlist = ncoll
-                else:
-                    shortlist = max(k, choose_shortlist(
-                        self._ensure_flat_shortlist_curve(name, mode, k=k),
-                        target_recall, ncoll,
-                    ))
+                    if layout_of(mode) == "ivf":
+                        n_probe = self._ensure_ivf_index(name)[1].count()
             elif mode == "lsh":
                 curve = self._ensure_lsh_bits_curve(name, k=k)
                 nb = max(curve)
@@ -2614,7 +2099,7 @@ class VectorStore:
                         mode = "exact"  # no measured beam certifies it
         corpus = self.get(name)
         if where is not None:
-            if mode in ("graph", "mtlsh", "ivfbq", "ivfpq", "ivfsq"):
+            if mode in ("graph", "mtlsh") or layout_of(mode) == "ivf":
                 # these indexes carry no metadata pre-filter; route through
                 # the measured chooser instead of post-filtering a
                 # traversal to fewer than k rows (see docstring)
@@ -2739,69 +2224,34 @@ class VectorStore:
         # behavior) was a corpus-sized job in the serve path; the
         # short-list size remains the recall dial either way, and
         # shortlist >= survivors stays exactly the filtered exact kNN.
-        def _survivor_codes(encoded):
-            if where is None:
-                return encoded
-            return encoded.join(
-                corpus.select(F.col("id").alias("item_id")),
-                "item_id", "left_semi",
-            )
-
-        if mode == "bq":
-            from .operators.bq import bq_search_rerank
-
-            encoded, sums, n = self._ensure_bq_codes(name, self.get(name))
-            return bq_search_rerank(
-                qdf, corpus, sums, n, k=k,
-                shortlist=self._resolve_shortlist(name, "bq", k, shortlist),
-                item_id="id", item_vec="embedding",
-                encoded=_survivor_codes(encoded),
+        if mode in MODES:
+            fam, layout = MODES[mode]
+            codec = CODECS[fam]
+            n_corpus = self._collection_nrows(name)
+            if layout == "ivf":
+                corpus_path, cents = self._ensure_ivf_index(name)
+                lay, p = self._ensure_codes(name, fam, layout)
+                n_probe, shortlist = self._resolve_composed(
+                    name, mode, n_probe, shortlist, k, target_recall
+                )
+                return codec.ivf_search(
+                    qdf, self.spark, lay.codes, corpus_path, cents, p, k=k,
+                    n_probe=n_probe, shortlist=shortlist, n_corpus=n_corpus,
+                )
+            lay, p = self._ensure_codes(name, fam, layout)
+            encoded = self._read_codes(lay)
+            if where is not None:
+                encoded = encoded.join(
+                    corpus.select(F.col("id").alias("item_id")),
+                    "item_id", "left_semi",
+                )
+            return codec.flat_search(
+                qdf, corpus, encoded, p, k=k,
+                shortlist=self._resolve_shortlist(
+                    name, fam, k, shortlist, target_recall
+                ),
+                n_corpus=n_corpus,
             ).select("query_id", "rank", "item_id", "dist")
-        if mode == "pq":
-            from .operators.pq import pq_search_rerank
-
-            encoded, books = self._ensure_pq_codes(name, self.get(name))
-            return pq_search_rerank(
-                qdf, corpus, _survivor_codes(encoded), books, k=k,
-                shortlist=self._resolve_shortlist(name, "pq", k, shortlist),
-                item_id="id", item_vec="embedding",
-            ).select("query_id", "rank", "item_id", "dist")
-        if mode == "sq":
-            from .operators.sq import sq_search_rerank
-
-            encoded, vmin, scale = self._ensure_sq_codes(name, self.get(name))
-            return sq_search_rerank(
-                qdf, corpus, _survivor_codes(encoded), vmin, scale, k=k,
-                shortlist=self._resolve_shortlist(name, "sq", k, shortlist),
-                item_id="id", item_vec="embedding",
-            ).select("query_id", "rank", "item_id", "dist")
-        if mode == "ivfpq":
-            from .operators.pq import ivfpq_search
-
-            codes_path, corpus_path, cents, books = self._ensure_ivfpq_codes(
-                name
-            )
-            n_probe, shortlist = self._resolve_composed(
-                name, "ivfpq", n_probe, shortlist, k=k
-            )
-            return ivfpq_search(
-                qdf, self.spark, codes_path, corpus_path, cents, books,
-                k=k, n_probe=n_probe, shortlist=shortlist, item_id="id",
-            )
-        if mode == "ivfsq":
-            from .operators.sq import ivfsq_search
-
-            codes_path, corpus_path, cents, svmin, sscale = (
-                self._ensure_ivfsq_codes(name)
-            )
-            n_probe, shortlist = self._resolve_composed(
-                name, "ivfsq", n_probe, shortlist, k=k
-            )
-            return ivfsq_search(
-                qdf, self.spark, codes_path, corpus_path, cents, svmin,
-                sscale, k=k, n_probe=n_probe, shortlist=shortlist,
-                item_id="id",
-            )
         if mode == "mtlsh":
             from .operators.mtlsh import mt_lsh_ann_pruned
 
@@ -2810,19 +2260,6 @@ class VectorStore:
                 qdf, self.spark, path,
                 corpus.select("id", "embedding"),
                 k=k, n_probe_buckets=mtlsh_budget, item_id="id",
-            )
-        if mode == "ivfbq":
-            from .operators.bq import ivfbq_search
-
-            codes_path, corpus_path, cents, sums, n = self._ensure_ivfbq_codes(
-                name
-            )
-            n_probe, shortlist = self._resolve_composed(
-                name, "ivfbq", n_probe, shortlist, k=k
-            )
-            return ivfbq_search(
-                qdf, self.spark, codes_path, corpus_path, cents, sums, n,
-                k=k, n_probe=n_probe, shortlist=shortlist, item_id="id",
             )
         raise ValueError(
             f"unknown mode {mode!r}; one of "

@@ -212,15 +212,15 @@ def write_postings_index(
     _doclens_from_forward(fwd).repartition("dbucket").write.mode(
         "overwrite"
     ).partitionBy("dbucket").parquet(os.path.join(path, "doclens"))
-    with open(os.path.join(path, "_META.json"), "w") as fh:
-        json.dump(
-            {"n_term_buckets": n_term_buckets, "n_doc_buckets": n_doc_buckets}, fh
-        )
+    from ..io.commitproto import clear_marker, publish_marker
+
+    publish_marker(
+        os.path.join(path, "_META.json"),
+        {"n_term_buckets": n_term_buckets, "n_doc_buckets": n_doc_buckets},
+    )
     # a full rebuild rewrites every layout and sidecar — any crash marker
     # from an interrupted upsert is moot
-    intent = os.path.join(path, "_UPSERT_INTENT.json")
-    if os.path.exists(intent):
-        os.remove(intent)
+    clear_marker(os.path.join(path, "_UPSERT_INTENT.json"), missing_ok=True)
     from ..io.relcache import assert_layout_depth
 
     for sub in ("postings", "forward", "terms", "stats", "doclens"):
